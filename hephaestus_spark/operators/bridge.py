@@ -30,7 +30,11 @@ def rebuild_bridge(
     ).dropDuplicates([task_key, "member"])
     if dim is None:
         return exploded
-    resolved = exploded.join(
-        F.broadcast(dim), exploded.member == dim[dim_natural_key], "left"
-    ).select(task_key, "member", F.col(dim_id).alias("member_id"))
-    return resolved
+    # private names: the dimension may carry columns named like the
+    # task key (e.g. ``id``), which would make the join ambiguous
+    keyed = dim.select(
+        F.col(dim_natural_key).alias("_dim_key"), F.col(dim_id).alias("_dim_id")
+    )
+    return exploded.join(
+        F.broadcast(keyed), F.col("member") == F.col("_dim_key"), "left"
+    ).select(task_key, "member", F.col("_dim_id").alias("member_id"))

@@ -15,9 +15,10 @@ Design:
 - ``FeedTransport`` is the seam: ``get_employees(known_hash)``,
   ``get_daily_tasks(known_hash, date)``, ``get_task_types()``, each
   returning a ``FeedResponse(payloads, new_hash)`` of RAW protobuf
-  message bytes. The poller never touches decoded objects — decode
-  happens in Spark (Arrow-batched mapInPandas), keeping the driver
-  thin even for large snapshots.
+  message bytes. The RPC has already brought every payload of a poll
+  to the driver, so the poller decodes them there
+  (``protodecode.feed_table``) straight into an Arrow table in the
+  pipeline's feed schema.
 - ``GrpcTransport`` (probe-gated: grpcio is not in this image) speaks
   raw unary-unary gRPC: request/response envelopes are encoded with
   the same public wire codec as the row messages, so NO generated stub
@@ -30,9 +31,12 @@ Design:
   pipeline's feed directory — each dropped file IS one upstream poll,
   exactly the stand-in contract ``EmployeeSyncPipeline`` /
   ``TaskSyncPipeline`` already consume (maxFilesPerTrigger=1 ⇒ one
-  micro-batch per poll). The hash handshake short-circuits BEFORE any
-  Spark work (P1), and the per-day task poll loop advances from the
-  pipeline watermark (A20) so restart resumes where the reference would.
+  micro-batch per poll). The file is written with pyarrow to a hidden
+  ``.``-prefixed name and renamed into place, so the file source sees
+  it whole or not at all; landing runs no Spark job. The hash handshake
+  short-circuits before any decode (P1), and the per-day task poll loop
+  advances from the pipeline watermark (A20) so restart resumes where
+  the reference would.
 """
 
 from __future__ import annotations
@@ -43,11 +47,13 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Optional, Protocol
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hephaestus_spark.sources import protodecode as pc
 from hephaestus_spark.sources.retry import retry_call
+from hephaestus_spark.streaming.pipeline import EMPLOYEE_FEED_SCHEMA, TASK_FEED_SCHEMA
 
 try:  # probe-gated: grpcio is optional and absent in this image
     import grpc  # type: ignore
@@ -284,9 +290,11 @@ class FeedPoller:
 
     Keeps the per-feed ``lastKnownHash`` exactly like the reference
     (in-process, reset on restart — employees.go:26; durability comes
-    from the watermark table, not the hash). Decode is Spark-side
-    (mapInPandas over an Arrow batch of payload bytes), so a snapshot
-    of any size never materializes as Python objects on the driver."""
+    from the watermark table, not the hash). The RPC response already
+    holds the poll's payloads on the driver, so they are decoded there
+    into one Arrow table and written as one parquet file — no Spark job,
+    no Python worker. A hash is committed only once its file is in
+    place, so a poll that fails to decode or land is retried in full."""
 
     transport: FeedTransport
     employee_feed_dir: Optional[str] = None
@@ -294,12 +302,21 @@ class FeedPoller:
     employee_hash: Optional[str] = None
     task_hash: Optional[str] = None
 
-    def _land(self, spark: SparkSession, payloads, feed_dir, decode, feed_date):
-        df = spark.createDataFrame([(p,) for p in payloads], "payload binary")
-        decoded = decode(df).withColumn("feed_date", F.lit(feed_date).cast("date"))
-        # one file per poll: coalesce(1) is deliberate (poll payloads are
-        # one RPC's worth of rows; parallelism comes from the pipeline)
-        decoded.coalesce(1).write.mode("append").parquet(feed_dir)
+    @staticmethod
+    def _land(payloads, fields, schema: T.StructType, feed_dir: str, feed_date) -> None:
+        table = pc.feed_table(payloads, fields, feed_date, schema)
+        os.makedirs(feed_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        # the file source skips '.'-prefixed names: the poll appears
+        # under its final name whole, by the rename, or not at all
+        tmp = os.path.join(feed_dir, f".{name}.tmp")
+        try:
+            pq.write_table(table, tmp)
+            os.rename(tmp, os.path.join(feed_dir, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     def poll_employees_once(
         self, spark: SparkSession, feed_date: Optional[datetime.date] = None
@@ -313,10 +330,9 @@ class FeedPoller:
         if not resp.payloads or resp.new_hash == self.employee_hash:
             self.employee_hash = resp.new_hash  # commit hash even on skip
             return 0
-        feed_date = feed_date or datetime.date.today()
         self._land(
-            spark, resp.payloads, self.employee_feed_dir,
-            pc.decode_employees, feed_date,
+            resp.payloads, pc.EMPLOYEE_FIELDS, EMPLOYEE_FEED_SCHEMA,
+            self.employee_feed_dir, feed_date or datetime.date.today(),
         )
         self.employee_hash = resp.new_hash
         return len(resp.payloads)
@@ -334,13 +350,9 @@ class FeedPoller:
         if not resp.payloads or resp.new_hash == self.task_hash:
             self.task_hash = resp.new_hash
             return 0
-        decoded_cols = lambda df: (  # noqa: E731 — align wire names to feed schema
-            pc.decode_tasks(df)
-            .withColumnRenamed("creation_date", "created_at")
-            .withColumnRenamed("closing_date", "closed_at")
-            .withColumn("executors", F.expr("transform(executors, x -> CAST(x AS STRING))"))
+        self._land(
+            resp.payloads, pc.TASK_FIELDS, TASK_FEED_SCHEMA, self.task_feed_dir, date
         )
-        self._land(spark, resp.payloads, self.task_feed_dir, decoded_cols, date)
         self.task_hash = resp.new_hash
         return len(resp.payloads)
 

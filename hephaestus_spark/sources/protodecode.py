@@ -6,18 +6,22 @@ employees/employees.go:144-158; messages from its olympus-protos repo,
 which is not vendored here — field numbers below define OUR wire
 contract, field names/types mirror the reference models 1:1).
 
-Two decode paths:
+One row decoder, ``decode_table``: a pure-Python wire-format parser
+(varints + length-delimited fields — the public protobuf encoding,
+developers.google.com/protocol-buffers/docs/encoding) that turns a list
+of payloads into a typed ``pyarrow.Table``, absent fields at their
+proto3 defaults. It runs where the payloads already are:
 
-1. ``decode_protobuf`` (the scale path when available): Spark's built-in
-   spark-protobuf connector (``from_protobuf`` + a compiled descriptor
-   set) decodes JVM-side at wire speed. The jar isn't bundled in every
-   distribution (not in this image), so it is probe-gated.
-2. ``decode_employees`` / ``decode_tasks`` (always available): a pure-
-   Python wire-format parser (varints + length-delimited fields — the
-   public protobuf encoding, developers.google.com/protocol-buffers/
-   docs/encoding) run as an Arrow-batched ``mapInPandas``. Batch-at-a-
-   time, never row-at-a-time Python: the per-batch loop is plain bytes
-   slicing with no object churn beyond the output lists.
+- ``feed_table`` shapes one poll's rows, held on the driver by the
+  poller that received them, into the pipeline's feed schema; the
+  poller writes the result as one parquet file with no Spark job.
+- ``decode_employees`` / ``decode_tasks`` decode a DataFrame column of
+  payloads in an Arrow-batched ``mapInPandas`` that calls the same
+  decoder per batch — batch-at-a-time, never row-at-a-time Python.
+
+``spark_protobuf_available`` probes for Spark's spark-protobuf connector
+(``from_protobuf`` + a compiled descriptor set, JVM-side); the jar is
+not bundled in every distribution.
 
 The encoder half exists for test fixtures and the micro-batch replay
 harness — production bytes come from the wire.
@@ -28,8 +32,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pac
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # ---------------------------------------------------------------------------
 # wire primitives
@@ -74,6 +82,9 @@ def _skip(b: bytes, i: int, wire: int) -> int:
     raise ValueError(f"unsupported wire type {wire}")
 
 
+_TS_FIELDS = {1: ("seconds", "int64"), 2: ("nanos", "int64")}
+
+
 def decode_message(b: bytes, fields: dict[int, tuple[str, str]]) -> dict:
     """Decode one message given {field_no: (name, kind)}.
 
@@ -114,7 +125,7 @@ def decode_message(b: bytes, fields: dict[int, tuple[str, str]]) -> dict:
                 out.setdefault(name, []).append(v)
         elif kind == "ts":
             n, i = _read_varint(b, i)
-            sub = decode_message(b[i : i + n], {1: ("seconds", "int64"), 2: ("nanos", "int64")})
+            sub = decode_message(b[i : i + n], _TS_FIELDS)
             out[name] = sub.get("seconds", 0)
             i += n
         elif kind == "bytes":
@@ -201,21 +212,61 @@ TASK_SCHEMA = (
 )
 
 _DEFAULTS = {"int64": 0, "bool": False, "string": "", "rep_string": [], "rep_int64": [], "ts": 0}
+_ARROW_TYPES = {
+    "int64": pa.int64(),
+    "bool": pa.bool_(),
+    "string": pa.string(),
+    "rep_string": pa.list_(pa.string()),
+    "rep_int64": pa.list_(pa.int64()),
+    "ts": pa.int64(),  # epoch seconds
+}
+
+
+def decode_table(payloads, fields: dict[int, tuple[str, str]]) -> pa.Table:
+    """Decode each payload into one row: one column per field in
+    field-number order, wire names and wire types, absent fields at
+    their proto3 default. Raises on a payload that does not parse."""
+    specs = [spec for _, spec in sorted(fields.items())]
+    cols: list[list] = [[] for _ in specs]
+    for b in payloads:
+        d = decode_message(b, fields)
+        for col, (name, kind) in zip(cols, specs):
+            col.append(d.get(name, _DEFAULTS[kind]))
+    return pa.table(
+        {name: pa.array(col, _ARROW_TYPES[kind]) for col, (name, kind) in zip(cols, specs)}
+    )
+
+
+# wire name -> feed column name, where the two differ
+_FEED_NAMES = {"creation_date": "created_at", "closing_date": "closed_at"}
+
+
+def feed_table(
+    payloads, fields: dict[int, tuple[str, str]], feed_date, schema: T.StructType
+) -> pa.Table:
+    """One poll's feed rows in exactly ``schema`` (the pipeline's feed
+    schema): epoch seconds become UTC timestamps, executor ids become
+    strings, and every row carries ``feed_date``."""
+    wire = decode_table(payloads, fields)
+    cols = {}
+    for name, kind in (spec for _, spec in sorted(fields.items())):
+        col = wire[name]
+        if kind == "ts":
+            col = pac.multiply_checked(col, 1_000_000)  # -> microseconds
+        cols[_FEED_NAMES.get(name, name)] = col
+    cols["feed_date"] = pa.array([feed_date] * wire.num_rows, pa.date32())
+    target = to_arrow_schema(schema)
+    return pa.table(cols).select(target.names).cast(target)
 
 
 def _decode_df(
     df: DataFrame, bytes_col: str, fields: dict[int, tuple[str, str]], schema: str
 ) -> DataFrame:
     """mapInPandas decode: Arrow batches in, typed Arrow batches out."""
-    names = [name for _, (name, _k) in sorted(fields.items())]
-    kinds = {name: k for _, (name, k) in fields.items()}
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = [decode_message(b, fields) for b in pdf[bytes_col]]
-            yield pd.DataFrame(
-                {n: [r.get(n, _DEFAULTS[kinds[n]]) for r in rows] for n in names}
-            )
+            yield decode_table(pdf[bytes_col], fields).to_pandas()
 
     return df.mapInPandas(decode_batches, schema=schema)
 
@@ -237,7 +288,7 @@ def spark_protobuf_available(spark) -> bool:
     """True when the spark-protobuf connector jar is on the classpath —
     then ``pyspark.sql.protobuf.functions.from_protobuf`` with a
     compiled descriptor set is the preferred (JVM, codegen) decode path
-    and the Arrow fallback above is unnecessary."""
+    and the pure-Python decoder above is unnecessary."""
     try:
         spark._jvm.java.lang.Class.forName(
             "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"

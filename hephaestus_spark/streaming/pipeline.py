@@ -595,7 +595,7 @@ class JdbcTaskSyncPipeline:
             f" VALUES (1, {ph}) ON CONFLICT (id) DO UPDATE SET"
             f" last_processed_date = GREATEST("
             f"scraper_status.last_processed_date, EXCLUDED.last_processed_date),"
-            f" updated_at = CURRENT_TIMESTAMP",
+            f" updated_at = now()",  # DuckDB rejects CURRENT_TIMESTAMP here
             [[day.isoformat()]],
         )
 

@@ -28,12 +28,15 @@ Two targets:
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -333,11 +336,19 @@ class WatermarkTable:
         return row["last_processed_date"] if row else None
 
     def write(self, spark: SparkSession, date, batch_id: int) -> None:
-        df = spark.createDataFrame(
-            [(1, date, batch_id)], "id int, last_processed_date date, batch_id long"
-        ).withColumn("updated_at", F.current_timestamp())
+        """One row, written by the driver with pyarrow: no Spark job."""
+        row = pa.table({
+            "id": pa.array([1], pa.int32()),
+            "last_processed_date": pa.array([date], pa.date32()),
+            "batch_id": pa.array([batch_id], pa.int64()),
+            "updated_at": pa.array(
+                [datetime.datetime.now(datetime.timezone.utc)],
+                pa.timestamp("us", tz="UTC"),
+            ),
+        })
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
+        os.makedirs(tmp)
+        pq.write_table(row, os.path.join(tmp, "part-00000.parquet"))
         old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
         if os.path.exists(self.path):
             os.rename(self.path, old)

@@ -79,7 +79,7 @@ def test_retry_gives_up_after_four_attempts(spark, tmp_path):
 
 def test_poll_to_pipeline_end_to_end(spark, tmp_path):
     """Two polls (second with one changed row) through the real
-    EmployeeSyncPipeline: transport bytes → mapInPandas decode → feed
+    EmployeeSyncPipeline: transport bytes → driver-side Arrow decode → feed
     file → streaming merge — the complete A1 ingestion story."""
     from hephaestus_spark.streaming.pipeline import EmployeeSyncPipeline
 
@@ -89,7 +89,7 @@ def test_poll_to_pipeline_end_to_end(spark, tmp_path):
     )
     poller = FeedPoller(transport=t, employee_feed_dir=feed)
     assert poller.poll_employees_once(spark, datetime.date(2024, 1, 1)) == 2
-    # unchanged upstream -> hash skip, no new file, no Spark work
+    # unchanged upstream -> hash skip, no new file, no decode
     assert poller.poll_employees_once(spark, datetime.date(2024, 1, 2)) == 0
 
     pipe = EmployeeSyncPipeline(

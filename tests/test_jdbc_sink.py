@@ -269,3 +269,39 @@ def test_merge_batch_maps_string_array_column(spark, tmp_path):
         "SELECT comments FROM tasks WHERE task_id = 1"
     ).fetchone()[0] == ["rewritten"]
     con.close()
+
+
+def test_task_watermark_advances_monotonically_on_duckdb(tmp_path):
+    """``JdbcTaskSyncPipeline.advance_watermark`` runs on DuckDB (no
+    Postgres needed): two forward advances move the watermark, a
+    backwards one leaves it where GREATEST keeps it."""
+    import datetime as dt
+
+    from hephaestus_spark.streaming.pipeline import BACKFILL_EPOCH, JdbcTaskSyncPipeline
+
+    db = str(tmp_path / "wm.duckdb")
+    con = duckdb.connect(db)
+    con.execute(
+        "CREATE TABLE scraper_status (id int PRIMARY KEY, last_processed_date date,"
+        " updated_at timestamp DEFAULT now())"
+    )
+    con.close()
+    pipe = JdbcTaskSyncPipeline(
+        feed_dir=str(tmp_path / "feed"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        connection_factory=lambda: duckdb.connect(db),
+        placeholder="?",
+    )
+    assert pipe.last_processed_date() == BACKFILL_EPOCH
+    d1, d2 = dt.date(2024, 1, 2), dt.date(2024, 1, 5)
+    pipe.advance_watermark(d1)
+    assert pipe.last_processed_date() == d1
+    pipe.advance_watermark(d2)
+    assert pipe.last_processed_date() == d2
+    pipe.advance_watermark(d1)  # an older feed file surfaces late
+    assert pipe.last_processed_date() == d2
+    con = duckdb.connect(db)
+    assert con.execute(
+        "SELECT count(*), count(updated_at) FROM scraper_status"
+    ).fetchone() == (1, 1)
+    con.close()

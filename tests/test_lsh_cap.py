@@ -199,6 +199,26 @@ def test_first_match_pairs_equivalent_under_synthetic_hot_set(spark):
     sig.unpersist()
 
 
+def test_first_match_pairs_single_table(spark):
+    """With one table there is no earlier table to have paired a pair
+    first: the first-match path must apply no earlier-table filter and
+    agree with the anti-join path."""
+    corpus = _boilerplate_corpus(spark, n_hot=12)
+    sig = minhash_signature_table(shingle_table(corpus, n=3), n_tables=1).persist()
+    first_match = minhash_candidate_pairs(
+        sig, n_tables=1, bucket_cap=10, pre_exclude_hot=True
+    ).toPandas()
+    baseline = minhash_candidate_pairs(
+        sig, n_tables=1, bucket_cap=100, pre_exclude_hot=False
+    ).toPandas()
+    got = set(zip(first_match.id_a, first_match.id_b))
+    assert (1000, 1001) in set(zip(baseline.id_a, baseline.id_b))
+    # the 12-doc bucket is hot at cap 10 and dropped; the rest survives
+    assert got == {p for p in zip(baseline.id_a, baseline.id_b) if p[0] >= 1000}
+    assert len(first_match) == len(got)
+    sig.unpersist()
+
+
 def test_narrow_banding_recall_pin(spark):
     """r16: candidate banding keys on 32-bit hash(mh_i). A 32-bit
     collision can only MERGE buckets (extra candidates, discarded by

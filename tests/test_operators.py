@@ -140,6 +140,21 @@ def test_bridge_rebuild_with_unmatched(spark):
     ]
 
 
+def test_bridge_dimension_sharing_the_task_key_name(spark):
+    """A dimension with its own ``id`` column (an employee snapshot)
+    joined to tasks keyed by ``id``: no ambiguous reference, and the
+    task key in the output is the task's."""
+    tasks = spark.createDataFrame(
+        [(101, ["ann", "bob"]), (102, ["ghost"])], "id long, executors array<string>"
+    )
+    employees = spark.createDataFrame(
+        [(1, "ann", 11), (2, "bob", 22)], "id long, shortname string, emp_id long"
+    )
+    out = bridge.rebuild_bridge(tasks, "id", "executors", employees, "shortname", "emp_id")
+    assert out.columns == ["id", "member", "member_id"]
+    assert _rows(out) == [(101, "ann", 11), (101, "bob", 22), (102, "ghost", None)]
+
+
 def test_bridge_shrinking_set(spark):
     # Delete semantics: the rebuilt bridge reflects ONLY the current set.
     tasks_v2 = spark.createDataFrame(

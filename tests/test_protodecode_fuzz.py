@@ -23,34 +23,32 @@ TEXT = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=80
 )  # any non-surrogate unicode
 
-EMPLOYEE_VALUES = st.fixed_dictionaries(
-    {
-        "id": st.integers(min_value=0, max_value=2**63 - 1),
-        "fullname": TEXT,
-        "shortname": TEXT,
-        "position": TEXT,
-        "email": TEXT,
-        "phone": TEXT,
-    }
-)
+# one strategy per message field, by field name
+EMPLOYEE_FIELD_VALUES = {
+    "id": st.integers(min_value=0, max_value=2**63 - 1),
+    "fullname": TEXT,
+    "shortname": TEXT,
+    "position": TEXT,
+    "email": TEXT,
+    "phone": TEXT,
+}
 
-TASK_VALUES = st.fixed_dictionaries(
-    {
-        "id": st.integers(min_value=0, max_value=2**63 - 1),
-        "type": TEXT,
-        "creation_date": st.integers(min_value=0, max_value=2**40),
-        "closing_date": st.integers(min_value=0, max_value=2**40),
-        "description": TEXT,
-        "address": TEXT,
-        "customer_name": TEXT,
-        "customer_login": TEXT,
-        "comments": st.lists(TEXT, max_size=5),
-        "executors": st.lists(
-            st.integers(min_value=0, max_value=2**63 - 1), max_size=5
-        ),
-        "is_closed": st.booleans(),
-    }
-)
+TASK_FIELD_VALUES = {
+    "id": st.integers(min_value=0, max_value=2**63 - 1),
+    "type": TEXT,
+    "creation_date": st.integers(min_value=0, max_value=2**40),
+    "closing_date": st.integers(min_value=0, max_value=2**40),
+    "description": TEXT,
+    "address": TEXT,
+    "customer_name": TEXT,
+    "customer_login": TEXT,
+    "comments": st.lists(TEXT, max_size=5),
+    "executors": st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=5),
+    "is_closed": st.booleans(),
+}
+
+EMPLOYEE_VALUES = st.fixed_dictionaries(EMPLOYEE_FIELD_VALUES)
+TASK_VALUES = st.fixed_dictionaries(TASK_FIELD_VALUES)
 
 
 def _norm(d: dict, fields) -> dict:

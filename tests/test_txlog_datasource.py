@@ -434,12 +434,18 @@ def _drain(reader, cur=None):
 
 
 def _commits(t, spark, n, files_each=2, rows_each=4, start=0):
+    """``n`` append commits of exactly ``files_each`` files each. A range
+    split on the distinct ids fixes the file count; a round-robin
+    ``repartition`` of so few rows leaves some partitions empty at some
+    core counts."""
     for c in range(n):
         df = spark.createDataFrame(
             [(start + c * rows_each + i, float(i)) for i in range(rows_each)],
             "id long, val double",
         )
-        t.append(df.repartition(files_each))
+        before = len(t.live_files())
+        t.append(df.repartitionByRange(files_each, "id"))
+        assert len(t.live_files()) - before == files_each  # precondition
 
 
 def test_pushdown_like_prefix_prunes_string_zones(spark, tmp_path):
